@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from gotsdb_spark.functions import word_shingles
+from gotsdb_spark.operators.fixpoint import fixpoint
 from gotsdb_spark.operators.registry import query
 from gotsdb_spark.sources.registry import fan_out, load_table
 
@@ -409,6 +410,23 @@ _CLUSTER_ORACLE = f"""
 """
 
 
+def _cluster_label_round(labels: DataFrame, edges: DataFrame) -> DataFrame:
+    """One min-label round: every doc takes the min of its own label and
+    its neighbors' labels over the symmetric (src, dst) edge set. No
+    broadcast hints — both frames scale with the pair graph."""
+    neighbor_min = (
+        edges.join(labels, edges.dst == labels.doc)
+        .groupBy("src")
+        .agg(F.min("label").alias("nmin"))
+    )
+    return labels.join(neighbor_min, labels.doc == F.col("src"), "left").select(
+        "doc",
+        F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias(
+            "label"
+        ),
+    )
+
+
 @query("dedup_cluster_canonical", oracle=_CLUSTER_ORACLE)
 def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters → canonical doc per cluster (connected
@@ -428,7 +446,9 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     shallow — typically 2-4 hops); each iteration is one equi-join +
     min-aggregation shuffle over the EDGE set (tiny vs the corpus), and
     localCheckpoint truncates the growing lineage. This is the standard
-    large-graph CC pattern on Spark without GraphX.
+    large-graph CC pattern on Spark without GraphX. `fixpoint` proves
+    convergence exactly and raises if 25 rounds do not reach it — a
+    chain longer than that is never returned half-labeled.
     """
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     edges = (
@@ -440,44 +460,13 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.select(F.col("src").alias("doc"))
         .distinct()
         .withColumn("label", F.col("doc"))
-        .localCheckpoint()
     )
-    prev_sig = None
-    for _ in range(25):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.doc)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.doc == F.col("src"), "left")
-            .select(
-                "doc",
-                F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias(
-                    "label"
-                ),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # Convergence via a one-aggregate EXACT signature (r14, was a
-        # count + xxhash64-sum whose collision could stop a round
-        # early): the node set is fixed and every per-node label is
-        # monotone non-increasing (F.least above), so sum(label)
-        # strictly decreases whenever ANY label changes — an unchanged
-        # (count, sum) pair is therefore exactly an unchanged frame, no
-        # 2^-64 caveat. Still one driver action per round (the old
-        # join-new-vs-old + diff-count was two), and the signature
-        # collect doubles as the checkpoint materializer.
-        sig = tuple(
-            new_labels.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("label").cast("decimal(38,0)")).alias("s"),
-            ).collect()[0]
-        )
-        labels = new_labels
-        if sig == prev_sig:
-            break
-        prev_sig = sig
+    labels = fixpoint(
+        labels,
+        lambda lb: _cluster_label_round(lb, edges),
+        25,
+        "dedup cluster label propagation",
+    )
     edges.unpersist()
     return labels.select(
         F.col("doc").alias("doc_id"),

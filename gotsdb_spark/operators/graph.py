@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gotsdb_spark.operators.fixpoint import fixpoint
 from gotsdb_spark.operators.registry import query
 from gotsdb_spark.sources.registry import load_table
 
@@ -400,9 +401,9 @@ def graph_components_star_contraction(spark: SparkSession, sf_dir: str) -> DataF
     Scale: each half-round is one groupBy-min plus one equi-join on the
     CURRENT edge set (which only shrinks toward one edge per node —
     never grows past 2|E|); nothing iterates on the driver but the
-    round counter and a 1-row convergence signature (count + order-
-    independent xxhash checksum — used ONLY for early exit, never in
-    the result). localCheckpoint truncates lineage per round.
+    round counter and a 1-row convergence signature observed on each
+    round's localCheckpoint job (operators/fixpoint.py — used ONLY for
+    early exit, never in the result).
     """
     from gotsdb_spark.operators.dedup import dedup_minhash_lsh
 
@@ -422,102 +423,47 @@ def star_contraction_edges(pairs: DataFrame) -> DataFrame:
     graph_components_star_contraction (rolls it up to component sizes)
     and dedup_savings_by_cluster_size (joins members back to document
     bytes). See the query docstring for the algorithm and scale
-    rationale; convergence is signature-checked with a loud
-    non-star-shape failure if the round bound is exhausted.
+    rationale; `fixpoint` proves convergence exactly or fails loudly,
+    and a large-star/small-star fixpoint is a star.
     """
     edges = (
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
-    prev_sig = None
-    for _ in range(12):  # ⌈log2⌉ bound for any plausible component count
-        sym = edges.union(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-        # large-star: hang every neighbor v > u off m = min(N(u) ∪ {u})
-        lmins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-        lmins = lmins.select("u", F.least("mn", F.col("u")).alias("m"))
-        ls = (
-            sym.join(lmins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star: flatten — point every smaller neighbor (and u) at
-        # the minimum of u's smaller neighborhood
-        dire = ls.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        smins = dire.groupBy("u").agg(F.min("v").alias("m"))
-        ss = (
-            dire.join(smins, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .union(smins.select(F.col("u").alias("a"), F.col("m").alias("b")))
-            .where(F.col("a") != F.col("b"))
-            .select(F.col("a").alias("u"), F.col("b").alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        sig = tuple(
-            ss.agg(
-                F.count("*").alias("n"),
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-            ).collect()[0]
-        )
-        prev_edges, edges = edges, ss
-        if sig == prev_sig:
-            # The contraction edge set is NOT monotone (sources appear
-            # and disappear as stars form), so unlike the min-label
-            # fixpoints the hash-sum signature alone is probabilistic.
-            # Fall through to ONE exact set-diff on the round the
-            # signature repeats (r14, ADVICE hardening): both frames
-            # are checkpointed and .distinct(), and their counts
-            # already match, so an empty exceptAll proves frame
-            # equality outright. Runs once per query, not per round.
-            if ss.exceptAll(prev_edges).limit(1).count() == 0:
-                break
-        prev_sig = sig
-    else:
-        # The 12-round ⌈log2⌉ bound is a heuristic, not a proof: if the
-        # loop exhausts without the signature reaching a fixpoint, the
-        # edge set may still contain non-star edges and the groupBy
-        # below would silently report wrong canonical ids. Fail loudly
-        # instead — a star is exactly "every u appears once, pointing
-        # at a node that is never itself a source".
-        non_star = (
-            edges.alias("e1")
-            .join(
-                edges.alias("e2"),
-                F.col("e1.v") == F.col("e2.u"),
-                "left_semi",
-            )
-            .limit(1)
-            .count()
-        )
-        # Chains are not the only non-star shape: a source u with two
-        # outgoing edges to DISTINCT sinks also breaks the star
-        # invariant (the groupBy(v) below would count that member once
-        # per sink). edges is .distinct(), so any duplicated u is
-        # exactly that case.
-        dup_source = (
-            edges.groupBy("u")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") > 1)
-            .limit(1)
-            .count()
-        )
-        if non_star or dup_source:
-            raise RuntimeError(
-                "star contraction did not converge within 12 rounds: "
-                "edge set still contains "
-                + ("chains (v appearing as a source)" if non_star
-                   else "a source with multiple distinct sinks")
-                + "; raise the round bound"
-            )
-    return edges
+    # ⌈log2⌉ bound for any plausible component count
+    return fixpoint(edges, _star_round, 12, "star contraction")
+
+
+def _star_round(edges: DataFrame) -> DataFrame:
+    """One large-star + small-star half-round pair over ``edges``."""
+    sym = edges.union(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    ).distinct()
+    # large-star: hang every neighbor v > u off m = min(N(u) ∪ {u})
+    lmins = sym.groupBy("u").agg(F.min("v").alias("mn"))
+    lmins = lmins.select("u", F.least("mn", F.col("u")).alias("m"))
+    ls = (
+        sym.join(lmins, "u")
+        .where(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+    # small-star: flatten — point every smaller neighbor (and u) at
+    # the minimum of u's smaller neighborhood
+    dire = ls.select(
+        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+    ).distinct()
+    smins = dire.groupBy("u").agg(F.min("v").alias("m"))
+    return (
+        dire.join(smins, "u")
+        .select(F.col("v").alias("a"), F.col("m").alias("b"))
+        .union(smins.select(F.col("u").alias("a"), F.col("m").alias("b")))
+        .where(F.col("a") != F.col("b"))
+        .select(F.col("a").alias("u"), F.col("b").alias("v"))
+        .distinct()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2425,6 +2371,41 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Articulation points (cut vertices) — round 12.
 # ---------------------------------------------------------------------------
 
+def _scenario_min_label_round(
+    labels: DataFrame, edx: DataFrame, keys: list[str]
+) -> DataFrame:
+    """One min-label propagation round over scenario-replicated edges,
+    shared by graph_articulation_points (scenario key ``["x"]``) and
+    graph_bridges (``["xa", "xb"]``): every node of every scenario
+    takes the min of its own label and its neighbors' labels.
+
+    Both frames are dictionary-bounded by construction (<= 31
+    scenarios x <= 25 nodes / <= 600 directed edges — the nation-pair
+    backbone), but they come out of localCheckpoint as ExistingRDDs
+    with NO size statistics, so the planner conservatively
+    sort-merge-joined them: 2 SMJs, 4 Exchanges and 4 Sorts per round
+    (plan excerpt in plans/r14/graph_bridges_before.txt). Explicit
+    broadcasts of the label frame restore the map-side join shape —
+    one Exchange per round (the min-label partial->final aggregate),
+    guide §3.1/§2.4. Broadcast sites classified "dim" in
+    tests/test_broadcast_guard.py.
+    """
+    cand = (
+        F.broadcast(labels)
+        .join(
+            edx,
+            [labels[k] == edx[k] for k in keys] + [labels.v == edx.a],
+        )
+        .groupBy(*[labels[k] for k in keys], F.col("b").alias("v"))
+        .agg(F.min("lbl").alias("nlbl"))
+    )
+    return labels.join(F.broadcast(cand), [*keys, "v"], "left").select(
+        *keys,
+        "v",
+        F.least(F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))).alias("lbl"),
+    )
+
+
 ARTICULATION_ORACLE = f"""
     WITH RECURSIVE {_BACKBONE_SQL},
     edb AS MATERIALIZED (
@@ -2480,11 +2461,9 @@ def graph_articulation_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel x = -1 for the unmodified baseline — run as ONE
     data-parallel min-label-propagation fixpoint over an
     (excl, node, label) frame of <= 26 x 25 rows, edges replicated per
-    scenario with both endpoints != excl. Convergence is
-    signature-checked per round (count + label-hash sum, the
-    star-contraction convention) with a loud failure if the
-    |V|-round bound is exhausted — never a silently-unconverged
-    component count.
+    scenario with both endpoints != excl. `fixpoint` proves
+    convergence exactly, with a loud failure if the |V|-round bound
+    is exhausted — never a silently-unconverged component count.
 
     Determinism: labels are integer minima over integer node ids;
     component counts are exact; the boolean compares two exact
@@ -2518,62 +2497,16 @@ def graph_articulation_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("x", "a", "b")
         .localCheckpoint(eager=False)
     )
-    labels = (
-        nodes.crossJoin(F.broadcast(excl))
-        .where(F.col("v") != F.col("x"))
-        .select("x", "v", F.col("v").alias("lbl"))
-        .localCheckpoint(eager=False)
+    labels = nodes.crossJoin(F.broadcast(excl)).where(
+        F.col("v") != F.col("x")
+    ).select("x", "v", F.col("v").alias("lbl"))
+    # diameter bound: <= |V| rounds for 25 nations
+    labels = fixpoint(
+        labels,
+        lambda lb: _scenario_min_label_round(lb, edx, ["x"]),
+        26,
+        "articulation-point label propagation",
     )
-    prev_sig = None
-    for _ in range(26):  # diameter bound: <= |V| rounds for 25 nations
-        # Dictionary-bounded frames (<= 26 scenarios x 25 nodes) come
-        # out of localCheckpoint WITHOUT size stats, so the planner
-        # sort-merge-joined them (4 Exchanges + Sorts per round);
-        # explicit broadcasts restore the map-side shape — one
-        # Exchange per round (guide §3.1). Sites classified "dim" in
-        # tests/test_broadcast_guard.py; see graph_bridges for the
-        # same fix with the measured plan diff.
-        cand = (
-            F.broadcast(labels)
-            .join(
-                edx,
-                (labels.x == edx.x) & (labels.v == edx.a),
-            )
-            .groupBy(labels.x, F.col("b").alias("v"))
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        labels = (
-            labels.join(F.broadcast(cand), ["x", "v"], "left")
-            .select(
-                "x",
-                "v",
-                F.least(
-                    F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # Exact convergence signature (r14): the (x, v) key set is
-        # fixed and each lbl is monotone non-increasing (F.least), so
-        # sum(lbl) strictly decreases whenever any label changes — an
-        # unchanged (count, sum) IS an unchanged frame, with no
-        # hash-collision caveat.
-        sig = tuple(
-            labels.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s"),
-            ).collect()[0]
-        )
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    else:
-        raise RuntimeError(
-            "articulation-point label propagation did not reach a "
-            "fixpoint within 26 rounds — the label frame is still "
-            "changing, so component counts would be wrong; raise the "
-            "round bound"
-        )
     cnt = labels.groupBy("x").agg(
         F.countDistinct("lbl").cast("long").alias("n_comp")
     ).localCheckpoint(eager=False)
@@ -2663,8 +2596,7 @@ def graph_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label-propagation fixpoint over a (xa, xb, node, label) frame
     of <= 31 x 25 rows, directed edges replicated per scenario with
     the excluded undirected pair dropped in both directions.
-    Convergence is signature-checked per round (count + label-hash
-    sum, the star-contraction convention) with a loud failure if the
+    `fixpoint` proves convergence exactly, with a loud failure if the
     |V|-round bound is exhausted — never a silently-unconverged
     component count.
 
@@ -2710,66 +2642,16 @@ def graph_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("xa", "xb", "a", "b")
         .localCheckpoint(eager=False)
     )
-    labels = (
-        nodes.crossJoin(F.broadcast(excl))
-        .select("xa", "xb", "v", F.col("v").alias("lbl"))
-        .localCheckpoint(eager=False)
+    labels = nodes.crossJoin(F.broadcast(excl)).select(
+        "xa", "xb", "v", F.col("v").alias("lbl")
     )
-    prev_sig = None
-    for _ in range(26):  # diameter bound: <= |V| rounds for 25 nations
-        # Both frames in the round are dictionary-bounded by
-        # construction (<= 31 scenarios x <= 25 nodes / <= 600 directed
-        # edges — the nation-pair backbone), but they come out of
-        # localCheckpoint as ExistingRDDs with NO size statistics, so
-        # the planner conservatively sort-merge-joined them: 2 SMJs,
-        # 4 Exchanges and 4 Sorts per round over <= 18k rows (plan
-        # excerpt in plans/r14/graph_bridges_before.txt). Explicit
-        # broadcasts of the label frame (775 rows) restore the
-        # map-side join shape — one Exchange per round (the min-label
-        # partial->final aggregate), guide §3.1/§2.4. Broadcast sites
-        # classified "dim" in tests/test_broadcast_guard.py.
-        cand = (
-            F.broadcast(labels)
-            .join(
-                edx,
-                (labels.xa == edx.xa)
-                & (labels.xb == edx.xb)
-                & (labels.v == edx.a),
-            )
-            .groupBy(labels.xa, labels.xb, F.col("b").alias("v"))
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        labels = (
-            labels.join(F.broadcast(cand), ["xa", "xb", "v"], "left")
-            .select(
-                "xa",
-                "xb",
-                "v",
-                F.least(
-                    F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # Exact convergence signature (r14): fixed (xa, xb, v) key set
-        # + monotone non-increasing lbl (F.least) ⇒ an unchanged
-        # (count, sum(lbl)) is exactly an unchanged frame — no
-        # hash-collision caveat (was count + xxhash64-sum).
-        sig = tuple(
-            labels.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s"),
-            ).collect()[0]
-        )
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    else:
-        raise RuntimeError(
-            "bridge label propagation did not reach a fixpoint within "
-            "26 rounds — the label frame is still changing, so "
-            "component counts would be wrong; raise the round bound"
-        )
+    # diameter bound: <= |V| rounds for 25 nations
+    labels = fixpoint(
+        labels,
+        lambda lb: _scenario_min_label_round(lb, edx, ["xa", "xb"]),
+        26,
+        "bridge label propagation",
+    )
     cnt = labels.groupBy("xa", "xb").agg(
         F.countDistinct("lbl").cast("long").alias("n_comp")
     ).localCheckpoint(eager=False)

@@ -71,6 +71,11 @@ def _append_sentinel_rows(path: str, df: DataFrame) -> None:
     driver-side write is O(1); timestamps cross as epoch micros to
     stay timezone-exact, and the file matches EVENT_SCHEMA so the
     schema-pinned file-source stream reads it like any other wave.
+
+    The write is atomic: the file is written under a dot-prefixed temp
+    name (Spark's file listing skips names starting with ".") and
+    renamed into place, so a concurrent micro-batch listing never sees
+    a half-written parquet file.
     """
     import uuid
 
@@ -88,7 +93,9 @@ def _append_sentinel_rows(path: str, df: DataFrame) -> None:
     tbl = pa.table(
         {
             "event_id": pa.array([r["event_id"] for r in rows], pa.int64()),
-            "ts": pa.array([r["ts_us"] for r in rows], pa.timestamp("us")),
+            "ts": pa.array(
+                [r["ts_us"] for r in rows], pa.timestamp("us", tz="UTC")
+            ),
             "user_id": pa.array([r["user_id"] for r in rows], pa.int64()),
             "event_type": pa.array(
                 [r["event_type"] for r in rows], pa.string()
@@ -97,7 +104,10 @@ def _append_sentinel_rows(path: str, df: DataFrame) -> None:
             "props": pa.array([r["props"] for r in rows], pa.string()),
         }
     )
-    pq.write_table(tbl, os.path.join(path, f"sentinel-{uuid.uuid4().hex}.parquet"))
+    name = f"sentinel-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(tbl, tmp)
+    os.rename(tmp, os.path.join(path, name))
 
 
 @query(

@@ -300,8 +300,10 @@ def fan_out(df: DataFrame, n: int | None = None) -> DataFrame:
     if 0 < n_files < 10_000:  # stat() only sane counts
         try:
             conf = df.sparkSession.conf
-            max_bytes = int(conf.get("spark.sql.files.maxPartitionBytes", "134217728").rstrip("b"))
-            open_cost = int(conf.get("spark.sql.files.openCostInBytes", "4194304").rstrip("b"))
+            # Spark's own byte-string parser: "128m", "4MB", "134217728b"
+            to_bytes = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+            max_bytes = to_bytes(conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
+            open_cost = to_bytes(conf.get("spark.sql.files.openCostInBytes", "4194304"))
             total = sum(
                 os.path.getsize(p.removeprefix("file:")) for p in files
             )

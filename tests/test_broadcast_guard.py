@@ -81,13 +81,13 @@ ALLOWED: dict[tuple[str, str, str], str] = {
     ("operators/graph.py", "graph_articulation_points", "excl"): "dim",
     ("operators/graph.py", "graph_articulation_points", "base"): "scalar",
     ("operators/graph.py", "graph_articulation_points", "nation.select"): "dim",
-    # r14: per-round fixpoint frames — <= (|V|+1 scenarios) x 25 nodes,
-    # nation-dictionary bounded; checkpointed RDDs have no stats so the
-    # planner needs the hint to avoid per-round sort-merge joins.
-    ("operators/graph.py", "graph_articulation_points", "labels"): "dim",
-    ("operators/graph.py", "graph_articulation_points", "cand"): "dim",
-    ("operators/graph.py", "graph_bridges", "labels"): "dim",
-    ("operators/graph.py", "graph_bridges", "cand"): "dim",
+    # r14: per-round fixpoint frames of the articulation / bridges
+    # round step shared by both queries — <= (|V|+1 or |E|+1
+    # scenarios) x 25 nodes, nation-dictionary bounded; checkpointed
+    # RDDs have no stats so the planner needs the hint to avoid
+    # per-round sort-merge joins.
+    ("operators/graph.py", "_scenario_min_label_round", "labels"): "dim",
+    ("operators/graph.py", "_scenario_min_label_round", "cand"): "dim",
     ("operators/graph.py", "_nation_bfs_sigma", "ed"): "dim",
     ("operators/graph.py", "_nation_bfs_sigma", "reach.select"): "dim",
     # round 12: HL shift — $100-grid dictionary (value-domain-bounded),

@@ -230,3 +230,23 @@ def test_events_load_pins_utc_even_with_existing_copy(spark):
         assert dict(df.dtypes)["ts"] == "timestamp"
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
+
+
+def test_fan_out_parses_byte_size_confs(spark, tmp_path):
+    """fan_out's split estimate must read maxPartitionBytes in Spark's
+    byte-string syntax ("128m"); an unparsed value used to fall back to
+    the raw file count, which for 10 small files suppressed the
+    repartition the byte estimate (1 split) calls for."""
+    from gotsdb_spark.sources.registry import fan_out
+
+    path = str(tmp_path / "ten_files")
+    spark.range(100).repartition(10).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) == 10
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "128m")
+    try:
+        assert fan_out(df, n=8) is not df
+    finally:
+        spark.conf.set(key, prev)

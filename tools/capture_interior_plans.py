@@ -85,26 +85,11 @@ def _bridges_frames(spark):
 
 
 def bridges_round(spark):
-    """One propagation round, built exactly as graph_bridges builds it
-    (mirrors the loop body — keep in sync with operators/graph.py)."""
+    """One propagation round, built by the operator's own round step."""
+    import gotsdb_spark.operators.graph as g
+
     edx, labels = _bridges_frames(spark)
-    cand = (
-        F.broadcast(labels)
-        .join(
-            edx,
-            (labels.xa == edx.xa)
-            & (labels.xb == edx.xb)
-            & (labels.v == edx.a),
-        )
-        .groupBy(labels.xa, labels.xb, F.col("b").alias("v"))
-        .agg(F.min("lbl").alias("nlbl"))
-    )
-    return labels.join(F.broadcast(cand), ["xa", "xb", "v"], "left").select(
-        "xa",
-        "xb",
-        "v",
-        F.least(F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))).alias("lbl"),
-    )
+    return g._scenario_min_label_round(labels, edx, ["xa", "xb"])
 
 
 def bridges_round_r13(spark):
