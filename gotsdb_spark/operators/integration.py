@@ -1,18 +1,58 @@
 """Integration queries: the KV engine and the streaming pipeline
 exposed through the driver's oracle gate.
 
-Most of the KV/streaming surface is exercised by unit tests, but these
-two queries put the storage engine's write→flush→promote→snapshot
-lifecycle and a real Structured Streaming run into the same
-DuckDB-oracle comparison as every relational operator — the engine's
-end-to-end behavior is hash-checked, not just unit-asserted.
+`kv_roundtrip_snapshot` puts the storage engine's
+write→flush→promote→snapshot lifecycle under the DuckDB-oracle
+comparison. Every other query replays `events` through a real
+Structured Streaming query and hash-checks what it emits against DuckDB
+computing the same answer in batch: the batch↔stream equivalence
+contract, enforced by the same gate as every relational operator.
+
+Every streaming replay runs through one driver and states only its
+stream, its sink and its waves:
+
+- A wave maps each replay directory to what lands in it: either
+  `(frame, files)`, the frame written by Spark as `files` parquet
+  files, or a list of literal sentinel rows (EVENT_SCHEMA tuples, `ts`
+  in epoch microseconds) appended driver-side by
+  `_append_sentinel_rows` to push the watermark.
+- `_replay(spark, start, waves)` writes waves[0], calls `start()` and
+  drains the query with processAllAvailable; then it writes each later
+  wave and drains again, so every wave is fully processed before the
+  next lands and the watermark sequence is exact. File counts and each
+  stream's maxFilesPerTrigger therefore fix the micro-batch
+  boundaries that the watermark results depend on. The query is always
+  stopped. Replays with their own sink (foreachBatch, parquet) pass
+  their stream writer's `start`.
+- `_replay_to_memory` is the memory-sink form: a uniquely named query
+  whose rows are collected, whose temp view is dropped, and which
+  returns them as a local frame with the stream's schema.
+- `_replay` pins spark.sql.shuffle.partitions for the query's lifetime
+  and restores the caller's value. These replays process a few
+  thousand rows per micro-batch, so their cost is dominated by
+  per-partition state-store commits (stores × several stateful
+  operators × several batches), not data: the left-outer interval join
+  drops 40 s → 11 s at sf0.01 going 32 → 8 partitions. The two
+  stream-stream joins run at 4: such a join opens 4 RocksDB stores per
+  partition per batch, and their watermark-advance micro-batches carry
+  1 row — halving the partitions cut each such batch from ~2.9 s to
+  ~2.0 s at sf0.1, results unchanged (hash-verified). Data-heavy
+  window-agg replays (~250k rows/batch) keep 8; 4 measured SLOWER
+  there (rate_limit_audit 6.3 → 7.1 s). waves[0] is written before the
+  pin, so an orderBy-shuffled first wave sorts at the caller's
+  partition count.
+
+`_replay` is the one place every streaming replay's query runs, so
+per-batch progress telemetry (durations, state rows, rows dropped by
+the watermark) hooks in there.
 """
 
 from __future__ import annotations
 
-import itertools
+import calendar
 import os
-from contextlib import contextmanager
+import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,43 +62,14 @@ from gotsdb_spark.scratch import scratch_dir as _scratch_dir
 from gotsdb_spark.sources.registry import load_table
 from gotsdb_spark.storage.engine import Engine
 from gotsdb_spark.streaming import (
+    EVENT_SCHEMA,
     read_events_stream,
-    run_stream_to_memory,
     session_window_values,
     windowed_event_counts,
 )
 
-_counter = itertools.count()
 
-
-@contextmanager
-def _replay_partitions(spark: SparkSession, n: int = 8):
-    """Pin spark.sql.shuffle.partitions for the lifetime of a stateful
-    replay, restoring the caller's value afterwards.
-
-    These replays process a few thousand rows per micro-batch, so their
-    cost is dominated by per-partition state-store commits (stores ×
-    several stateful operators × several batches), not data: the
-    left-outer interval join drops 40s → 11s at sf0.01 going 32 → 8
-    partitions (r12). The STREAM-STREAM JOIN replays pass n=4 (r14): a
-    stream-stream join opens 4 RocksDB stores per partition per batch,
-    and their watermark-advance micro-batches carry 1 row — halving
-    the partitions cut each such batch from ~2.9 s to ~2.0 s at sf0.1,
-    results unchanged (hash-verified). Data-heavy window-agg replays
-    (~250k rows/batch) keep 8 — 4 measured SLOWER there
-    (rate_limit_audit 6.3 → 7.1 s). This mirrors the production knob —
-    shuffle partitions sized to per-batch stream volume, not to the
-    batch-analytics default.
-    """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _append_sentinel_rows(path: str, df: DataFrame) -> None:
+def _append_sentinel_rows(path: str, rows: list) -> None:
     """Append a HANDFUL of watermark-advance sentinel rows to a replay
     dir driver-side (pyarrow) instead of through a Spark write job.
 
@@ -66,48 +77,134 @@ def _append_sentinel_rows(path: str, df: DataFrame) -> None:
     0.7–1.8 s of pure job overhead (shuffle + task launch + commit
     protocol) per call — measured at sf0.1 on the left-outer interval
     join, whose two sentinel waves × two sides paid it four times.
-    The sentinel frames are 1–2 literal or 1-row-aggregate rows by
-    construction (they exist only to push the watermark), so the
-    driver-side write is O(1); timestamps cross as epoch micros to
-    stay timezone-exact, and the file matches EVENT_SCHEMA so the
-    schema-pinned file-source stream reads it like any other wave.
+    Sentinels are 1–2 literal rows by construction (they exist only to
+    push the watermark), so the driver-side write is O(1). `rows` are
+    EVENT_SCHEMA tuples with `ts` as epoch microseconds, so no
+    timezone conversion happens anywhere, and the file matches
+    EVENT_SCHEMA so the schema-pinned file-source stream reads it like
+    any other wave.
 
     The write is atomic: the file is written under a dot-prefixed temp
     name (Spark's file listing skips names starting with ".") and
     renamed into place, so a concurrent micro-batch listing never sees
     a half-written parquet file.
     """
-    import uuid
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    rows = df.select(
-        F.col("event_id").cast("long"),
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        F.col("user_id").cast("long"),
-        F.col("event_type").cast("string"),
-        F.col("value").cast("double"),
-        F.col("props").cast("string"),
-    ).collect()
-    tbl = pa.table(
-        {
-            "event_id": pa.array([r["event_id"] for r in rows], pa.int64()),
-            "ts": pa.array(
-                [r["ts_us"] for r in rows], pa.timestamp("us", tz="UTC")
-            ),
-            "user_id": pa.array([r["user_id"] for r in rows], pa.int64()),
-            "event_type": pa.array(
-                [r["event_type"] for r in rows], pa.string()
-            ),
-            "value": pa.array([r["value"] for r in rows], pa.float64()),
-            "props": pa.array([r["props"] for r in rows], pa.string()),
-        }
+    schema = pa.schema(
+        [
+            ("event_id", pa.int64()),
+            ("ts", pa.timestamp("us", tz="UTC")),
+            ("user_id", pa.int64()),
+            ("event_type", pa.string()),
+            ("value", pa.float64()),
+            ("props", pa.string()),
+        ]
+    )
+    tbl = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema
     )
     name = f"sentinel-{uuid.uuid4().hex}.parquet"
     tmp = os.path.join(path, f".{name}.tmp")
     pq.write_table(tbl, tmp)
     os.rename(tmp, os.path.join(path, name))
+
+
+def _utc_us(day: str) -> int:
+    """Epoch microseconds of 00:00 UTC on `day` (YYYY-MM-DD)."""
+    return calendar.timegm(time.strptime(day, "%Y-%m-%d")) * 1_000_000
+
+
+def _past_end_us(ev: DataFrame) -> int:
+    """Epoch microseconds 3 days after the last event in `ev` (one
+    1-row collect): a sentinel time past every real window."""
+    last = ev.agg(F.unix_micros(F.max("ts"))).collect()[0][0]
+    return last + 3 * 86_400_000_000
+
+
+def _write_wave(wave: dict) -> None:
+    """Land one wave: each directory gets its frame, as `files` parquet
+    files, or its sentinel rows."""
+    for path, part in wave.items():
+        if isinstance(part, list):
+            _append_sentinel_rows(path, part)
+        else:
+            frame, files = part
+            frame.select(*EVENT_SCHEMA.fieldNames()).repartition(
+                files
+            ).write.mode("append").parquet(path)
+
+
+def _replay(spark: SparkSession, start, waves: list, partitions: int = 8) -> None:
+    """Run one streaming replay: land waves[0], `start()` the query and
+    drain it, then land and drain each later wave; always stop the
+    query. Shuffle partitions are pinned to `partitions` from the start
+    of the query to its stop (module docstring)."""
+    _write_wave(waves[0])
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    try:
+        q = start()
+        try:
+            q.processAllAvailable()
+            for wave in waves[1:]:
+                _write_wave(wave)
+                q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _replay_to_memory(
+    spark: SparkSession,
+    stream: DataFrame,
+    output_mode: str,
+    waves: list,
+    partitions: int = 8,
+) -> DataFrame:
+    """`_replay` into a memory sink under a unique query name; returns
+    the emitted rows as a local frame with the stream's schema. The
+    sink's temp view is dropped, so no replay leaves its rows
+    registered in the session."""
+    name = f"itg_{uuid.uuid4().hex}"
+    sink = stream.writeStream.format("memory").queryName(name)
+    try:
+        _replay(spark, sink.outputMode(output_mode).start, waves, partitions)
+        rows = spark.table(name).collect()
+    finally:
+        spark.catalog.dropTempView(name)
+    return spark.createDataFrame(rows, stream.schema)
+
+
+def _merge_sink(spark: SparkSession, keys: list, value: str):
+    """foreachBatch sink that MERGEs each micro-batch's delta rows into
+    a `keys`-keyed parquet state table executor-side: delta-wins-else-
+    base full-outer coalesce of `value` (the warehouse_merge_upsert
+    shape), written to a versioned store path per batch. The only
+    driver-held state is the current store PATH string, O(1); no batch
+    row ever crosses to the driver.
+
+    Returns `(upsert, store)`: the foreachBatch function, and a
+    function reading the latest store snapshot back."""
+    root = _scratch_dir(prefix="gotsdb_stream_merge_store_")
+    state_path: list = [None]
+
+    def store() -> DataFrame:
+        return spark.read.parquet(state_path[0])
+
+    def upsert(batch_df: DataFrame, batch_id: int) -> None:
+        target = os.path.join(root, f"v{batch_id}")
+        merged = batch_df.select(*keys, value)
+        if state_path[0] is not None:
+            merged = store().withColumnRenamed(value, "cur").join(
+                merged.withColumnRenamed(value, "delta"), keys, "full_outer"
+            ).select(*keys, F.coalesce("delta", "cur").alias(value))
+        merged.write.mode("overwrite").parquet(target)
+        state_path[0] = target
+
+    return upsert, store
 
 
 @query(
@@ -164,24 +261,11 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir).where(
         F.col("event_type").isin("purchase", "signup")
     )
-    ev.orderBy(F.hash("event_id")).repartition(4).write.mode("overwrite").parquet(
-        replay
+    stream = windowed_event_counts(
+        read_events_stream(spark, replay, 2), watermark="1 hour"
     )
-    name = f"itg_stream_{os.getpid()}_{next(_counter)}"
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(
-            windowed_event_counts(
-                read_events_stream(spark, replay, 2), watermark="1 hour"
-            ),
-            name,
-            output_mode="complete",
-        )
-        try:
-            out = spark.table(name).collect()
-        finally:
-            q.stop()
-    return spark.createDataFrame(
-        out, "window_start timestamp, event_type string, n bigint, sum_value double"
+    return _replay_to_memory(
+        spark, stream, "complete", [{replay: (ev.orderBy(F.hash("event_id")), 4)}]
     )
 
 
@@ -226,29 +310,12 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session_end = last event + gap)."""
     replay = _scratch_dir(prefix="gotsdb_stream_sess_")
     ev = load_table(spark, "events", sf_dir).where(F.col("event_type") == "purchase")
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    sentinel = spark.createDataFrame(
-        [(-1, "2025-01-01 00:00:00", -1, "purchase", 0.0, None)],
-        "event_id long, ts string, user_id long, event_type string, value double, props string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-
-    name = f"itg_sess_{os.getpid()}_{next(_counter)}"
+    sentinel = [(-1, _utc_us("2025-01-01"), -1, "purchase", 0.0, None)]
     stream = session_window_values(
         read_events_stream(spark, replay, 64), gap="30 minutes", watermark="2 hours"
     )
-    ev.select(cols).repartition(1).write.mode("append").parquet(replay)
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(stream, name, output_mode="append")
-        try:
-            _append_sentinel_rows(replay, sentinel)
-            q.processAllAvailable()
-            out = spark.table(name).collect()
-        finally:
-            q.stop()
-    return spark.createDataFrame(
-        out,
-        "session_start timestamp, session_end timestamp, user_id long,"
-        " n_events bigint, session_value double",
+    return _replay_to_memory(
+        spark, stream, "append", [{replay: (ev, 1)}, {replay: sentinel}]
     )
 
 
@@ -294,29 +361,15 @@ def streaming_append_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_type") == "error")
         & (F.col("ts") < F.lit("2024-01-05").cast("timestamp"))
     )
-    sentinel = spark.createDataFrame(
-        [(0, "2024-03-01 00:00:00", 0, "sentinel", 0.0, None)],
-        "event_id long, ts string, user_id long, event_type string, value double, props string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-
-    name = f"itg_append_{os.getpid()}_{next(_counter)}"
+    sentinel = [(0, _utc_us("2024-03-01"), 0, "sentinel", 0.0, None)]
     stream = windowed_event_counts(
         read_events_stream(spark, replay, 64), window="1 hour", watermark="1 hour"
     )
-    on_time.select(cols).repartition(1).write.mode("append").parquet(replay)
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(stream, name, output_mode="append")
-        try:
-            late.select(cols).repartition(1).write.mode("append").parquet(replay)
-            q.processAllAvailable()
-            _append_sentinel_rows(replay, sentinel)
-            q.processAllAvailable()
-            out = spark.table(name).collect()
-        finally:
-            q.stop()
-    return spark.createDataFrame(
-        out, "window_start timestamp, event_type string, n bigint, sum_value double"
+    return _replay_to_memory(
+        spark,
+        stream,
+        "append",
+        [{replay: (on_time, 1)}, {replay: (late, 1)}, {replay: sentinel}],
     )
 
 
@@ -363,7 +416,6 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gotsdb_spark.streaming.ingest import join_purchases_with_recent_errors
 
     ev = load_table(spark, "events", sf_dir)
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     cutoff = F.lit("2024-01-20").cast("timestamp")
     purchases = ev.where((F.col("event_type") == "purchase") & (F.col("ts") < cutoff))
     errors = ev.where((F.col("event_type") == "error") & (F.col("ts") < cutoff))
@@ -377,26 +429,21 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     p_dir = _scratch_dir(prefix="gotsdb_ssj_p_")
     e_dir = _scratch_dir(prefix="gotsdb_ssj_e_")
-    purchases.select(cols).repartition(1).write.mode("append").parquet(p_dir)
-    errors.select(cols).repartition(1).write.mode("append").parquet(e_dir)
-
     joined = join_purchases_with_recent_errors(
         read_events_stream(spark, p_dir, 64),
         read_events_stream(spark, e_dir, 64),
         horizon="1 hour",
     ).select("p_id", "p_user", "e_id")
-
-    name = f"itg_ssj_{os.getpid()}_{next(_counter)}"
-    with _replay_partitions(spark, 4):
-        q = run_stream_to_memory(joined, name, output_mode="append")
-        try:
-            late_p.select(cols).repartition(1).write.mode("append").parquet(p_dir)
-            late_e.select(cols).repartition(1).write.mode("append").parquet(e_dir)
-            q.processAllAvailable()
-            out = spark.table(name).collect()
-        finally:
-            q.stop()
-    return spark.createDataFrame(out, "p_id long, p_user long, e_id long")
+    return _replay_to_memory(
+        spark,
+        joined,
+        "append",
+        [
+            {p_dir: (purchases, 1), e_dir: (errors, 1)},
+            {p_dir: (late_p, 1), e_dir: (late_e, 1)},
+        ],
+        4,
+    )
 
 
 @query(
@@ -424,12 +471,9 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gotsdb_spark.streaming.ingest import dedup_events
 
     ev = load_table(spark, "events", sf_dir)
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     on_time = ev.where(F.col("ts") < F.lit("2024-01-20").cast("timestamp"))
 
     replay = _scratch_dir(prefix="gotsdb_dedup_stream_")
-    on_time.select(cols).repartition(1).write.mode("append").parquet(replay)
-
     deduped = dedup_events(
         read_events_stream(spark, replay, 64), watermark="30 days"
     ).select(
@@ -439,18 +483,9 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 1000).cast("long").alias("v_milli"),
     )
 
-    name = f"itg_dedup_{os.getpid()}_{next(_counter)}"
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(deduped, name, output_mode="append")
-        try:
-            # wave 2: byte-identical redelivery — must all be dropped
-            on_time.select(cols).repartition(1).write.mode("append").parquet(replay)
-            q.processAllAvailable()
-            out = spark.table(name).collect()
-        finally:
-            q.stop()
-    return spark.createDataFrame(
-        out, "event_id long, user_id long, event_type string, v_milli long"
+    # wave 2: byte-identical redelivery — must all be dropped
+    return _replay_to_memory(
+        spark, deduped, "append", [{replay: (on_time, 1)}, {replay: (on_time, 1)}]
     )
 
 
@@ -492,13 +527,10 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     ev = load_table(spark, "events", sf_dir)
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     wave1 = ev.where(F.col("ts") < F.lit("2024-01-15").cast("timestamp"))
     wave2 = ev.where(F.col("ts") >= F.lit("2024-01-15").cast("timestamp"))
 
     replay = _scratch_dir(prefix="gotsdb_stateful_")
-    wave1.select(cols).repartition(1).write.mode("append").parquet(replay)
-
     stream = read_events_stream(spark, replay, 64).select(
         "user_id", F.floor(F.col("value") * 1000).cast("long").alias("v_milli")
     )
@@ -510,25 +542,12 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    name = f"itg_stateful_{os.getpid()}_{next(_counter)}"
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(totals, name, output_mode="update")
-        try:
-            wave2.select(cols).repartition(1).write.mode("append").parquet(replay)
-            q.processAllAvailable()
-            out = (
-                spark.table(name)
-                .groupBy("user_id")
-                .agg(
-                    F.max("n_events").alias("n_events"),
-                    F.max("total_milli").alias("total_milli"),
-                )
-                .collect()
-            )
-        finally:
-            q.stop()
-    return spark.createDataFrame(
-        out, "user_id long, n_events long, total_milli long"
+    emitted = _replay_to_memory(
+        spark, totals, "update", [{replay: (wave1, 1)}, {replay: (wave2, 1)}]
+    )
+    return emitted.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max("total_milli").alias("total_milli"),
     )
 
 
@@ -562,11 +581,6 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     replay = _scratch_dir(prefix="gotsdb_stream_enrich_")
     ev = load_table(spark, "events", sf_dir).where(F.col("event_type") == "purchase")
-    ev.orderBy(F.hash("event_id")).repartition(8).write.mode("overwrite").parquet(
-        replay
-    )
-    from gotsdb_spark.streaming import read_events_stream, run_stream_to_memory
-
     customer = load_table(spark, "customer", sf_dir).select(
         "c_custkey", "c_nationkey"
     )
@@ -589,15 +603,8 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("day"), "n_name", "n", "value_e3")
     )
-    name = f"itg_enrich_{os.getpid()}_{next(_counter)}"
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(enriched, name, output_mode="complete")
-        try:
-            out = spark.table(name).collect()
-        finally:
-            q.stop()
-    return spark.createDataFrame(
-        out, "day timestamp, n_name string, n bigint, value_e3 bigint"
+    return _replay_to_memory(
+        spark, enriched, "complete", [{replay: (ev.orderBy(F.hash("event_id")), 8)}]
     )
 
 
@@ -641,23 +648,12 @@ def streaming_interval_join_left_outer(spark: SparkSession, sf_dir: str) -> Data
     from gotsdb_spark.streaming.ingest import join_purchases_with_recent_errors
 
     ev = load_table(spark, "events", sf_dir)
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     cutoff = F.lit("2024-01-20").cast("timestamp")
     purchases = ev.where((F.col("event_type") == "purchase") & (F.col("ts") < cutoff))
     errors = ev.where((F.col("event_type") == "error") & (F.col("ts") < cutoff))
 
-    def _sentinel(eid: int, ts: str):
-        return spark.createDataFrame(
-            [(eid, ts, -1, "sentinel", 0.0, None)],
-            "event_id long, ts string, user_id long, event_type string,"
-            " value double, props string",
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-
     p_dir = _scratch_dir(prefix="gotsdb_ssjo_p_")
     e_dir = _scratch_dir(prefix="gotsdb_ssjo_e_")
-    purchases.select(cols).repartition(1).write.mode("append").parquet(p_dir)
-    errors.select(cols).repartition(1).write.mode("append").parquet(e_dir)
-
     joined = join_purchases_with_recent_errors(
         read_events_stream(spark, p_dir, 64),
         read_events_stream(spark, e_dir, 64),
@@ -665,21 +661,12 @@ def streaming_interval_join_left_outer(spark: SparkSession, sf_dir: str) -> Data
         how="leftOuter",
     ).select("p_id", "p_user", "e_id")
 
-    name = f"itg_ssjo_{os.getpid()}_{next(_counter)}"
-    with _replay_partitions(spark, 4):
-        q = run_stream_to_memory(joined, name, output_mode="append")
-        try:
-            for wave, ts in enumerate(
-                ["2024-03-01 00:00:00", "2024-03-02 00:00:00"]
-            ):
-                s = _sentinel(20_000_000 + wave, ts)
-                _append_sentinel_rows(p_dir, s)
-                _append_sentinel_rows(e_dir, s)
-                q.processAllAvailable()
-            out = spark.table(name).where(F.col("p_user") >= 0).collect()
-        finally:
-            q.stop()
-    return spark.createDataFrame(out, "p_id long, p_user long, e_id long")
+    waves = [{p_dir: (purchases, 1), e_dir: (errors, 1)}]
+    for wave, day in enumerate(["2024-03-01", "2024-03-02"]):
+        s = [(20_000_000 + wave, _utc_us(day), -1, "sentinel", 0.0, None)]
+        waves.append({p_dir: s, e_dir: s})
+    emitted = _replay_to_memory(spark, joined, "append", waves, 4)
+    return emitted.where(F.col("p_user") >= 0)
 
 
 _TWS_ORACLE = """
@@ -707,34 +694,17 @@ def streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFram
     from gotsdb_spark.streaming.stateful import running_user_peaks
 
     ev = load_table(spark, "events", sf_dir)
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     wave1 = ev.where(F.col("ts") < F.lit("2024-01-15").cast("timestamp"))
     wave2 = ev.where(F.col("ts") >= F.lit("2024-01-15").cast("timestamp"))
 
     replay = _scratch_dir(prefix="gotsdb_tws_")
-    wave1.select(cols).repartition(1).write.mode("append").parquet(replay)
-
     stats = running_user_peaks(read_events_stream(spark, replay, 64))
-
-    name = f"itg_tws_{os.getpid()}_{next(_counter)}"
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(stats, name, output_mode="update")
-        try:
-            wave2.select(cols).repartition(1).write.mode("append").parquet(replay)
-            q.processAllAvailable()
-            out = (
-                spark.table(name)
-                .groupBy("user_id")
-                .agg(
-                    F.max("n_events").alias("n_events"),
-                    F.max("max_value").alias("max_value"),
-                )
-                .collect()
-            )
-        finally:
-            q.stop()
-    return spark.createDataFrame(
-        out, "user_id long, n_events long, max_value double"
+    emitted = _replay_to_memory(
+        spark, stats, "update", [{replay: (wave1, 1)}, {replay: (wave2, 1)}]
+    )
+    return emitted.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max("max_value").alias("max_value"),
     )
 
 
@@ -822,11 +792,6 @@ def streaming_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay = _scratch_dir(prefix="gotsdb_stream_topk_")
     checkpoint = _scratch_dir(prefix="gotsdb_stream_topk_ckpt_")
     ev = load_table(spark, "events", sf_dir)
-    ev.orderBy(F.hash("event_id")).repartition(6).write.mode("overwrite").parquet(
-        replay
-    )
-    from gotsdb_spark.streaming import read_events_stream
-
     counts = (
         read_events_stream(spark, replay, 2)
         .groupBy(
@@ -835,42 +800,14 @@ def streaming_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("ws"), "event_type", "n")
     )
-    store_root = _scratch_dir(prefix="gotsdb_stream_topk_store_")
-    state_path: list = [None]
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        target = os.path.join(store_root, f"v{batch_id}")
-        delta = batch_df.select("ws", "event_type", "n")
-        if state_path[0] is None:
-            delta.write.mode("overwrite").parquet(target)
-        else:
-            cur = spark.read.parquet(state_path[0]).withColumnRenamed(
-                "n", "cur_n"
-            )
-            merged = cur.join(
-                delta.withColumnRenamed("n", "delta_n"),
-                ["ws", "event_type"],
-                "full_outer",
-            ).select(
-                "ws",
-                "event_type",
-                F.coalesce("delta_n", "cur_n").alias("n"),
-            )
-            merged.write.mode("overwrite").parquet(target)
-        state_path[0] = target
-
-    with _replay_partitions(spark):
-        q = (
-            counts.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    board = spark.read.parquet(state_path[0]).select(
+    upsert, store = _merge_sink(spark, ["ws", "event_type"], "n")
+    sink = (
+        counts.writeStream.foreachBatch(upsert)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("update")
+    )
+    _replay(spark, sink.start, [{replay: (ev.orderBy(F.hash("event_id")), 6)}])
+    board = store().select(
         F.col("ws").alias("window_start"),
         "event_type",
         F.col("n").cast("bigint").alias("n"),
@@ -934,11 +871,6 @@ def streaming_ab_conversion_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay = _scratch_dir(prefix="gotsdb_stream_ab_")
     checkpoint = _scratch_dir(prefix="gotsdb_stream_ab_ckpt_")
     ev = load_table(spark, "events", sf_dir)
-    ev.orderBy(F.hash("event_id")).repartition(6).write.mode(
-        "overwrite"
-    ).parquet(replay)
-    from gotsdb_spark.streaming import read_events_stream
-
     units = (
         read_events_stream(spark, replay, 2)
         .groupBy("user_id", F.col("ts").cast("date").alias("d"))
@@ -948,46 +880,14 @@ def streaming_ab_conversion_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("conv")
         )
     )
-    store_root = _scratch_dir(prefix="gotsdb_stream_ab_store_")
-    # Executor-side keyed state table: the only driver-held state is
-    # the current snapshot PATH (O(1)); every batch's rows stay on the
-    # executors through the MERGE write — nothing data-sized ever
-    # crosses to the driver.
-    state_path: list = [None]
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        target = os.path.join(store_root, f"v{batch_id}")
-        delta = batch_df.select("user_id", "d", "conv")
-        if state_path[0] is None:
-            delta.write.mode("overwrite").parquet(target)
-        else:
-            cur = spark.read.parquet(state_path[0]).withColumnRenamed(
-                "conv", "cur_conv"
-            )
-            merged = cur.join(
-                delta.withColumnRenamed("conv", "delta_conv"),
-                ["user_id", "d"],
-                "full_outer",
-            ).select(
-                "user_id",
-                "d",
-                F.coalesce("delta_conv", "cur_conv").alias("conv"),
-            )
-            merged.write.mode("overwrite").parquet(target)
-        state_path[0] = target
-
-    with _replay_partitions(spark):
-        q = (
-            units.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    board = spark.read.parquet(state_path[0]).select(
+    upsert, store = _merge_sink(spark, ["user_id", "d"], "conv")
+    sink = (
+        units.writeStream.foreachBatch(upsert)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("update")
+    )
+    _replay(spark, sink.start, [{replay: (ev.orderBy(F.hash("event_id")), 6)}])
+    board = store().select(
         (
             F.expr(
                 "conv(substring(md5(CAST(user_id AS STRING)), 1, 4), 16, 10)"
@@ -1126,15 +1026,10 @@ def streaming_session_eviction_audit(spark: SparkSession, sf_dir: str) -> DataFr
     ev = load_table(spark, "events", sf_dir).where(
         F.col("event_type") == "purchase"
     )
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     cut = F.lit("2024-01-15").cast("timestamp")
     wave1 = ev.where(F.col("ts") < cut)
     wave2 = ev.where(F.col("ts") >= cut)
-    sentinel = spark.createDataFrame(
-        [(-1, "2025-01-01 00:00:00", -1, "purchase", 0.0, None)],
-        "event_id long, ts string, user_id long, event_type string,"
-        " value double, props string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    sentinel = [(-1, _utc_us("2025-01-01"), -1, "purchase", 0.0, None)]
 
     stream = session_window_values(
         read_events_stream(spark, replay, 64),
@@ -1149,24 +1044,16 @@ def streaming_session_eviction_audit(spark: SparkSession, sf_dir: str) -> DataFr
             "append"
         ).parquet(store)
 
-    wave1.select(cols).repartition(1).write.mode("append").parquet(replay)
-    with _replay_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(ledger)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            wave2.select(cols).repartition(1).write.mode("append").parquet(
-                replay
-            )
-            q.processAllAvailable()
-            _append_sentinel_rows(replay, sentinel)
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    sink = (
+        stream.writeStream.foreachBatch(ledger)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+    )
+    _replay(
+        spark,
+        sink.start,
+        [{replay: (wave1, 1)}, {replay: (wave2, 1)}, {replay: sentinel}],
+    )
     evicted = spark.read.parquet(store)
     # Wave-count-bounded (3), never data-sized: the distinct batch ids.
     bids = sorted(
@@ -1237,12 +1124,12 @@ def streaming_checkpoint_restart_replay(
     Replay layout: epoch 1 = purchases/signups before Jan 15 11:30
     (a cut that splits a live hour at EVERY fixture scale, pinned by
     tests/test_round13_ops.py), processed to quiescence, query
-    stopped; epoch
-    2 = a NEW query instance on the remaining timeline plus one
-    far-future sentinel (3 days past max ts) whose watermark push
-    closes and emits every real window while its own window never
-    emits. Sums use exact e3 integers so the cross-epoch merge is
-    hash-exact, not tolerance-compared.
+    stopped; epoch 2 = the remaining timeline lands while the job is
+    down, a NEW query instance drains it, then one far-future sentinel
+    (3 days past max ts) lands, whose watermark push closes and emits
+    every real window while its own window never emits. Sums use exact
+    e3 integers so the cross-epoch merge is hash-exact, not
+    tolerance-compared.
 
     Scale: watermark bounds state at O(open windows x types) at any
     volume; the parquet sink + checkpoint pair is exactly the
@@ -1256,63 +1143,43 @@ def streaming_checkpoint_restart_replay(
     replay = _scratch_dir(prefix="gotsdb_ckpt_replay_")
     out = _scratch_dir(prefix="gotsdb_ckpt_out_")
     ckpt = _scratch_dir(prefix="gotsdb_ckpt_log_")
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     ev = load_table(spark, "events", sf_dir).where(
         F.col("event_type").isin("purchase", "signup")
     )
     cutoff = F.lit("2024-01-15 11:30:00").cast("timestamp")
     wave1 = ev.where(F.col("ts") < cutoff)
     wave2 = ev.where(F.col("ts") >= cutoff)
-    mx = ev.agg(F.max("ts").alias("mx")).collect()[0]["mx"]  # 1-row bound
-    sentinel = (
-        spark.createDataFrame(
-            [(10**9, None, 0, "purchase", 0.0, "{}")],
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double, props string",
+    sentinel = [(10**9, _past_end_us(ev), 0, "purchase", 0.0, "{}")]
+    agg = (
+        read_events_stream(spark, replay, 2)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum(F.floor(F.col("value") * 1000).cast("long"))
+            .cast("long")
+            .alias("sum_v_milli"),
         )
-        .withColumn("ts", F.lit(mx) + F.expr("INTERVAL 3 DAYS"))
+        .select(
+            F.col("w.start").alias("window_start"),
+            "event_type",
+            "n",
+            "sum_v_milli",
+        )
     )
-
-    def start():
-        agg = (
-            read_events_stream(spark, replay, 2)
-            .withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(
-                F.count("*").cast("long").alias("n"),
-                F.sum(F.floor(F.col("value") * 1000).cast("long"))
-                .cast("long")
-                .alias("sum_v_milli"),
-            )
-            .select(
-                F.col("w.start").alias("window_start"),
-                "event_type",
-                "n",
-                "sum_v_milli",
-            )
-        )
-        return (
-            agg.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        )
-
-    with _replay_partitions(spark):
-        # Epoch 1: first half of the timeline, then a planned stop.
-        wave1.select(cols).repartition(2).write.mode("append").parquet(replay)
-        q1 = start()
-        q1.processAllAvailable()
-        q1.stop()
-        # Epoch 2: rest of the timeline + flush sentinel land while the
-        # job is down; a NEW instance resumes from the same checkpoint
-        # (epoch-1 files still in the source dir — offset log skips them).
-        wave2.select(cols).repartition(2).write.mode("append").parquet(replay)
-        _append_sentinel_rows(replay, sentinel)
-        q2 = start()
-        q2.processAllAvailable()
-        q2.stop()
+    sink = (
+        agg.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+    )
+    # Epoch 1: first half of the timeline, then a planned stop.
+    _replay(spark, sink.start, [{replay: (wave1, 2)}])
+    # Epoch 2: the rest of the timeline lands while the job is down; a
+    # NEW instance resumes from the same checkpoint (epoch-1 files are
+    # still in the source dir — the offset log skips them), then the
+    # flush sentinel lands.
+    _replay(spark, sink.start, [{replay: (wave2, 2)}, {replay: sentinel}])
 
     return spark.read.schema(
         "window_start timestamp, event_type string,"
@@ -1381,16 +1248,7 @@ def streaming_rate_limit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     replay = _scratch_dir(prefix="gotsdb_stream_rate_")
     ev = load_table(spark, "events", sf_dir)
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    mx_ts = ev.agg(F.max("ts").alias("mx")).collect()[0]["mx"]  # 1-row bound
-    sentinel = (
-        spark.createDataFrame(
-            [(10**9, None, 0, "sentinel", 0.0, "{}")],
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double, props string",
-        )
-        .withColumn("ts", F.lit(mx_ts) + F.expr("INTERVAL 3 DAYS"))
-    )
+    sentinel = [(10**9, _past_end_us(ev), 0, "sentinel", 0.0, "{}")]
     per_min = (
         read_events_stream(spark, replay, 2)
         .withWatermark("ts", "10 minutes")
@@ -1398,21 +1256,11 @@ def streaming_rate_limit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("n"))
         .select(F.col("w.start").alias("m"), "event_type", "n")
     )
-    name = f"itg_rate_{os.getpid()}_{next(_counter)}"
-    ev.orderBy(F.hash("event_id")).select(cols).repartition(4).write.mode(
-        "append"
-    ).parquet(replay)
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(per_min, name, output_mode="append")
-        try:
-            q.processAllAvailable()
-            _append_sentinel_rows(replay, sentinel)
-            q.processAllAvailable()
-            out = spark.table(name).collect()
-        finally:
-            q.stop()
-    emitted = spark.createDataFrame(
-        out, "m timestamp, event_type string, n bigint"
+    emitted = _replay_to_memory(
+        spark,
+        per_min,
+        "append",
+        [{replay: (ev.orderBy(F.hash("event_id")), 4)}, {replay: sentinel}],
     ).localCheckpoint(eager=False)
     mx = emitted.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n_minutes"),
@@ -1509,16 +1357,7 @@ def streaming_gap_outage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     replay = _scratch_dir(prefix="gotsdb_stream_gap_")
     ev = load_table(spark, "events", sf_dir)
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    mx_ts = ev.agg(F.max("ts").alias("mx")).collect()[0]["mx"]  # 1-row bound
-    sentinel = (
-        spark.createDataFrame(
-            [(10**9, None, 0, "sentinel", 0.0, "{}")],
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double, props string",
-        )
-        .withColumn("ts", F.lit(mx_ts) + F.expr("INTERVAL 3 DAYS"))
-    )
+    sentinel = [(10**9, _past_end_us(ev), 0, "sentinel", 0.0, "{}")]
     per_min = (
         read_events_stream(spark, replay, 2)
         .withWatermark("ts", "10 minutes")
@@ -1526,21 +1365,11 @@ def streaming_gap_outage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("n"))
         .select(F.col("w.start").alias("m"), "event_type")
     )
-    name = f"itg_gap_{os.getpid()}_{next(_counter)}"
-    ev.orderBy(F.hash("event_id")).select(cols).repartition(4).write.mode(
-        "append"
-    ).parquet(replay)
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(per_min, name, output_mode="append")
-        try:
-            q.processAllAvailable()
-            _append_sentinel_rows(replay, sentinel)
-            q.processAllAvailable()
-            out = spark.table(name).collect()
-        finally:
-            q.stop()
-    emitted = spark.createDataFrame(
-        out, "m timestamp, event_type string"
+    emitted = _replay_to_memory(
+        spark,
+        per_min,
+        "append",
+        [{replay: (ev.orderBy(F.hash("event_id")), 4)}, {replay: sentinel}],
     ).localCheckpoint(eager=False)
     gaps = emitted.select(
         "event_type",

@@ -843,7 +843,7 @@ def _registry_plan_sweep(spark):
     # Batch queries build (and, for eager operators, run tiny sf0.001
     # jobs) independently -> small driver thread pool (guide §2.6).
     # Integration-module entries REPLAY real streams and pin session
-    # conf for the replay's lifetime (_replay_partitions), so they stay
+    # conf for the replay's lifetime (integration._replay), so they stay
     # serial — conf save/restore must not interleave.
     from concurrent.futures import ThreadPoolExecutor
 

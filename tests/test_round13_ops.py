@@ -197,12 +197,17 @@ def test_streaming_topk_sink_is_executor_side():
     from gotsdb_spark.operators import integration
 
     src = inspect.getsource(integration.streaming_topk_trending)
-    assert ".collect()" not in src, (
+    sink = inspect.getsource(integration._merge_sink)
+    assert ".collect()" not in src + sink, (
         "streaming_topk_trending must not collect batch rows to the "
         "driver"
     )
-    assert "full_outer" in src and ".parquet(" in src
-    assert "spark.read.parquet(state_path[0])" in src
+    # The shared MERGE sink performs the keyed upsert and persists it.
+    assert "_merge_sink(" in src and "foreachBatch(upsert)" in src
+    assert "full_outer" in sink and ".parquet(target)" in sink
+    # The leaderboard is read back from the executor-side store.
+    assert "spark.read.parquet(state_path[0])" in sink
+    assert "store()" in src
 
 
 # --------------------------------- prefix-filter pair-budget guard

@@ -555,15 +555,19 @@ def test_streaming_ab_sink_is_executor_side():
     from gotsdb_spark.operators import integration
 
     src = inspect.getsource(integration.streaming_ab_conversion_live)
-    assert ".collect()" not in src, (
+    sink = inspect.getsource(integration._merge_sink)
+    assert ".collect()" not in src + sink, (
         "streaming_ab_conversion_live must not collect batch rows to "
         "the driver"
     )
-    # The sink performs the delta-wins keyed MERGE and persists it.
-    assert "full_outer" in src and ".parquet(" in src
+    # The shared MERGE sink performs the delta-wins keyed upsert and
+    # persists it.
+    assert "_merge_sink(" in src and "foreachBatch(upsert)" in src
+    assert "full_outer" in sink and ".parquet(target)" in sink
     # And the final readout is loaded back from the executor-side
     # store, not rebuilt from driver memory.
-    assert "spark.read.parquet(state_path[0])" in src
+    assert "spark.read.parquet(state_path[0])" in sink
+    assert "store()" in src
 
 
 # ---------------------------------------------------------------------------
