@@ -17,15 +17,21 @@ Spark-native design (SURVEY.md §1.3) — not a translation:
   (cold.go:140,152). Last-writer-wins upsert (hot.go:53) becomes
   log-compaction: row_number() over (partitionBy key, orderBy
   write_ts/seq desc) == 1 — the idiomatic immutable-storage upsert.
-- The hot tier is Spark's block manager: promotion = read + compact +
-  .cache() (engine.go:100-109 ≙ lazy cache materialization), eviction =
-  .unpersist() (engine.go:121). A driver-side overlay dict holds
-  unflushed writes so read-your-writes holds without re-shuffling the
-  cached view on every point write.
-- Flush appends only the pending delta as a new log segment instead of
-  rewriting the collection (cold.go:136-154 rewrites everything) —
-  at 100 TB a flush is O(delta), and `compact()` is the explicit
-  log-rewrite maintenance job.
+- The hot tier holds a collection the way the reference does, in
+  driver memory (engine.go:100-109), whenever its log has at most
+  `materialize_threshold` rows: promotion counts the rows from the
+  Parquet footers, reads the log with pyarrow and keeps the latest row
+  per key in a dict, with no Spark job. A larger log is promoted as
+  the cached compacted view (eviction = .unpersist(), engine.go:121)
+  and point reads run as filters on it; that is the only form that can
+  hold a log larger than driver memory. A driver-side overlay dict
+  holds unflushed writes so read-your-writes holds without
+  re-shuffling the cached view on every point write.
+- Flush appends only the pending delta as one new log segment, written
+  with pyarrow under a dot-prefixed temp name and renamed into place,
+  instead of rewriting the collection (cold.go:136-154 rewrites
+  everything) — at 100 TB a flush is O(delta), and `compact()` is the
+  explicit log-rewrite maintenance job.
 
 Deliberately NOT replicated (reference bugs/gaps, SURVEY.md §1.1):
 unsynchronized concurrent map access, flush-only-on-crash durability,
@@ -41,10 +47,17 @@ import os
 import re
 import shutil
 import threading
+import time
+import uuid
 
-from pyspark.sql import DataFrame, Row, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.window import Window as W
 
 LOG_SCHEMA = T.StructType(
@@ -54,6 +67,15 @@ LOG_SCHEMA = T.StructType(
         T.StructField("write_ts", T.TimestampType(), True),
         T.StructField("seq", T.LongType(), False),
     ]
+)
+
+# LOG_SCHEMA as the driver reads and writes it (write_ts as µs UTC).
+# Spark writes `write_ts` as INT96 by default; pyarrow decodes that at
+# µs and casts every segment to these types, so Spark- and
+# pyarrow-written segments mix.
+_ARROW_LOG_SCHEMA = to_arrow_schema(LOG_SCHEMA)
+_PARQUET = ds.ParquetFileFormat(
+    read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
 )
 
 # Collection ids: alphanumeric, per the cold-listing regex (cold.go:72) —
@@ -87,6 +109,45 @@ def _err_not_found_hot(id: str) -> CollectionNotFoundError:
     )
 
 
+def _log_dataset(path: str) -> ds.Dataset:
+    """The collection log as pyarrow sees it. Discovery skips names
+    starting with "." or "_" (temp segments, _SUCCESS, .crc files), as
+    Spark's file listing does."""
+    return ds.dataset(path, format=_PARQUET, schema=_ARROW_LOG_SCHEMA)
+
+
+def _latest_per_key(log: pa.Table) -> pa.Table:
+    """Driver form of `Engine._compacted`: per key, the row with the
+    greatest write_ts (nulls rank lowest, as Spark's desc order puts
+    them last), ties broken by the greatest seq. Sorted by key."""
+    if log.num_rows == 0:
+        return log
+    log = log.sort_by(
+        [("key", "ascending"), ("write_ts", "descending"), ("seq", "descending")],
+        null_placement="at_end",
+    )
+    keys = log["key"].combine_chunks()
+    first = pa.concat_arrays([pa.array([True]), pc.not_equal(keys[1:], keys[:-1])])
+    return log.filter(first)
+
+
+def _write_segment(path: str, table: pa.Table) -> None:
+    """Add `table` to a log dir as ONE parquet file, atomically: it is
+    written and fsynced under a dot-prefixed temp name, which Spark and
+    pyarrow both skip, then renamed into place. The `_SUCCESS` marker
+    Spark's committer leaves in a written dir is kept too, and only
+    after the segment is in place."""
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    with open(tmp, "wb") as f:
+        pq.write_table(table, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.rename(tmp, os.path.join(path, name))
+    open(os.path.join(path, "_SUCCESS"), "a").close()
+
+
 class Engine:
     """Two-tier collection engine over a SparkSession.
 
@@ -111,17 +172,20 @@ class Engine:
         self.spark = spark
         self.data_dir = os.path.abspath(data_dir)
         self.auto_create = auto_create_collection
-        # Collections up to this many compacted keys are ALSO pulled into
-        # a driver-side dict on promotion, giving O(1) point reads — the
-        # reference's own semantics (it gob-decodes the whole collection
-        # into process memory, engine.go:100-109). Larger collections
-        # stay executor-side and point reads run as filters on the
-        # cached view; at 100 TB that's the only possible mode.
+        # A collection whose log holds at most this many rows (counted
+        # from the parquet footers, before any data is read) is promoted
+        # into driver memory with pyarrow: a compacted arrow table plus a
+        # key -> value dict, giving O(1) point reads and no Spark job —
+        # the reference's own semantics (it gob-decodes the whole
+        # collection into process memory, engine.go:100-109). Larger
+        # logs stay executor-side and point reads run as filters on the
+        # cached compacted view; at 100 TB that's the only possible mode.
         self.materialize_threshold = materialize_threshold
         os.makedirs(self.data_dir, exist_ok=True)  # cold.go:27-38
-        # Hot tier: compacted base view (cached DataFrame or None for
-        # empty/new collections) + unflushed-write overlay.
-        self._hot_base: dict[str, DataFrame | None] = {}
+        # Hot tier: compacted base (arrow table on the driver, cached
+        # DataFrame above the threshold, or None for new collections) +
+        # unflushed-write overlay.
+        self._hot_base: dict[str, pa.Table | DataFrame | None] = {}
         self._hot_dict: dict[str, dict[str, str] | None] = {}
         self._pending: dict[str, dict[str, str]] = {}
         # Durable per-collection sequence floor: the max `seq` present in
@@ -142,21 +206,26 @@ class Engine:
     def _log_seq_floor(self, id: str) -> int:
         """Max seq already persisted in the collection's log (0 if none).
 
-        One parquet-stats scan of a single column per engine generation;
-        cached and advanced locally afterwards."""
+        Read from the parquet footers' row-group statistics once per
+        engine generation, then cached and advanced locally. Only a row
+        group written without statistics has its seq column read. No
+        Spark job."""
         if id in self._seq_floor:
             return self._seq_floor[id]
         path = self._path(id)
         floor = 0
         if os.path.isdir(path):
-            row = (
-                self.spark.read.schema(LOG_SCHEMA)
-                .parquet(path)
-                .agg(F.max("seq"))
-                .first()
-            )
-            if row is not None and row[0] is not None:
-                floor = int(row[0])
+            for file in _log_dataset(path).files:
+                with pq.ParquetFile(file) as pf:
+                    col = pf.schema_arrow.get_field_index("seq")
+                    for i in range(pf.metadata.num_row_groups):
+                        stats = pf.metadata.row_group(i).column(col).statistics
+                        if stats is not None and stats.has_min_max:
+                            top = stats.max
+                        else:
+                            top = pc.max(pf.read_row_group(i, columns=["seq"])["seq"]).as_py()
+                        if top is not None:
+                            floor = max(floor, top)
         self._seq_floor[id] = floor
         return floor
 
@@ -253,26 +322,38 @@ class Engine:
             .drop("_rn")
         )
 
-    def _overlay_df(self, id: str, start_seq: int = 0) -> DataFrame | None:
-        """Pending (unflushed) writes as a DataFrame, or None.
+    def _overlay_table(self, id: str, start_seq: int) -> pa.Table:
+        """Pending (unflushed) writes as log rows stamped now.
 
         ``start_seq`` is the durable floor: persisted overlay rows get
         seqs strictly above every seq already in the log, keeping the
         (write_ts, seq) LWW tie-break valid across flush segments and
         engine generations."""
-        pending = self._pending.get(id)
-        if not pending:
-            return None
-        rows = [
-            Row(key=k, value=v, write_ts=None, seq=start_seq + 1 + i)
-            for i, (k, v) in enumerate(pending.items())
-        ]
-        return self.spark.createDataFrame(rows, LOG_SCHEMA).withColumn(
-            "write_ts", F.current_timestamp()
+        pending = self._pending[id]
+        n = len(pending)
+        return pa.Table.from_pydict(
+            {
+                "key": list(pending),
+                "value": list(pending.values()),
+                "write_ts": [time.time_ns() // 1000] * n,
+                "seq": list(range(start_seq + 1, start_seq + 1 + n)),
+            },
+            schema=_ARROW_LOG_SCHEMA,
         )
 
+    def _driver_log(self, path: str) -> pa.Table | None:
+        """The compacted log read on the driver, or None when the
+        footers count more than `materialize_threshold` rows (the log
+        then stays on Spark)."""
+        log = _log_dataset(path)
+        if log.count_rows() > self.materialize_threshold:
+            return None
+        return _latest_per_key(log.to_table())
+
     def snapshot(self, id: str) -> DataFrame:
-        """The collection's current latest-per-key view (base ⊎ pending).
+        """The collection's current latest-per-key view (base ⊎ pending,
+        pending winning) in LOG_SCHEMA; pending rows carry the seqs the
+        next flush would give them.
 
         This is the DataFrame handle analytics run against — the KV API
         below is point lookups on top of it.
@@ -281,42 +362,46 @@ class Engine:
             if id not in self._hot_base:
                 self.load_collection_if_not_present(id)
             base = self._hot_base[id]
-            overlay = self._overlay_df(id)
-        parts = [p for p in (base, overlay) if p is not None]
-        if not parts:
-            return self.spark.createDataFrame([], LOG_SCHEMA)
-        if len(parts) == 1:
-            return parts[0]
-        # Overlay wins over base at equal keys: give overlay rows a
-        # higher seq than anything in the base (base seqs are finite).
-        merged = parts[0].unionByName(
-            parts[1].withColumn("seq", F.col("seq") + F.lit(2**62))
-        )
-        return self._compacted(merged)
+            overlay = self._overlay_table(id, self._log_seq_floor(id))
+        if isinstance(base, DataFrame):
+            if not overlay.num_rows:
+                return base
+            pending = self.spark.createDataFrame(overlay, LOG_SCHEMA)
+            return base.join(pending.select("key"), "key", "left_anti").unionByName(pending)
+        if base is None:
+            base = _ARROW_LOG_SCHEMA.empty_table()
+        kept = base.filter(pc.invert(pc.is_in(base["key"], overlay["key"])))
+        return self.spark.createDataFrame(pa.concat_tables([kept, overlay]), LOG_SCHEMA)
 
     # -- load / flush (promotion / demotion) ----------------------------
 
     def load_collection(self, id: str) -> None:
-        """Cold → hot promotion (engine.go:100-109): read the log,
-        compact, cache. The cache materializes lazily on first action —
-        the same read-through shape as the reference's load-on-miss."""
+        """Cold → hot promotion (engine.go:100-109).
+
+        A log of at most `materialize_threshold` rows is read and
+        compacted on the driver into the hot dict, as the reference
+        loads the whole collection into its hot map; no Spark job runs.
+        A larger log becomes the cached compacted view, which
+        materializes lazily on first action — the same read-through
+        shape as the reference's load-on-miss."""
         if not self._cold_exists(id):
             raise _err_not_found_any(id)
         path = self._path(id)
         with self._lock:
-            df = self._compacted(self.spark.read.schema(LOG_SCHEMA).parquet(path))
-            df = df.cache()
-            self._hot_base[id] = df
-            self._pending.setdefault(id, {})
-            # Reference-parity fast path: small collections live fully in
-            # driver memory (as the reference's hot map does) → O(1)
-            # reads with no per-read Spark job.
-            sample = df.select("key", "value").limit(self.materialize_threshold + 1)
-            rows = sample.collect()
-            if len(rows) <= self.materialize_threshold:
-                self._hot_dict[id] = {r["key"]: r["value"] for r in rows}
-            else:
+            base = self._driver_log(path)
+            if base is None:
+                self._hot_base[id] = self._compacted(
+                    self.spark.read.schema(LOG_SCHEMA).parquet(path)
+                ).cache()
                 self._hot_dict[id] = None
+            else:
+                self._hot_base[id] = base
+                # to_numpy().tolist(): ~12x faster than to_pylist()
+                # on string columns (no per-value arrow scalar).
+                self._hot_dict[id] = dict(
+                    zip(base["key"].to_numpy().tolist(), base["value"].to_numpy().tolist())
+                )
+            self._pending.setdefault(id, {})
 
     def load_collection_if_not_present(self, id: str) -> None:
         """engine.go:187-222: hot → no-op; cold → promote; neither →
@@ -340,32 +425,28 @@ class Engine:
         """Hot → cold + evict (engine.go:111-126).
 
         Unlike the reference's whole-collection rewrite (cold.go:140),
-        this appends only the pending delta as a new log segment —
-        O(unflushed writes), not O(collection). Eviction unpersists the
-        cached base (engine.go:121 ≙ unpersist)."""
+        this appends only the pending delta as one log segment written
+        on the driver — O(unflushed writes), not O(collection), and no
+        Spark job. A collection with no log yet gets one even when it is
+        empty, so it exists cold. Eviction unpersists a cached base
+        (engine.go:121 ≙ unpersist)."""
         with self._lock:
             if id not in self._hot_base:
                 raise _err_not_found_hot(id)
-            base = self._hot_base[id]
             path = self._path(id)
-            overlay = None
-            if self._pending.get(id):
+            pending = self._pending[id]
+            if pending or not os.path.isdir(path):
                 floor = self._log_seq_floor(id)
-                overlay = self._overlay_df(id, start_seq=floor)
-                self._seq_floor[id] = floor + len(self._pending[id])
-            if overlay is not None:
-                overlay.write.mode("append").parquet(path)
-            elif base is None and not os.path.isdir(path):
-                # Empty auto-created collection: materialize an empty log
-                # so the collection exists cold (flush must persist it).
-                self.spark.createDataFrame([], LOG_SCHEMA).write.mode(
-                    "append"
-                ).parquet(path)
-            if base is not None:
-                base.unpersist()
-            del self._hot_base[id]
-            del self._pending[id]
-            self._hot_dict.pop(id, None)
+                _write_segment(path, self._overlay_table(id, floor))
+                self._seq_floor[id] = floor + len(pending)
+            self._evict(id)
+
+    def _evict(self, id: str) -> None:
+        base = self._hot_base.pop(id)
+        if isinstance(base, DataFrame):
+            base.unpersist()
+        del self._pending[id]
+        self._hot_dict.pop(id, None)
 
     def flush_all_collections(self) -> list[Exception]:
         """engine.go:128-137 — collects errors, never short-circuits."""
@@ -382,25 +463,32 @@ class Engine:
 
         The reference implicitly 'compacts' by rewriting the whole blob
         on every flush; here compaction is explicit and schedulable
-        (the usual Spark/lakehouse pattern for append-logs)."""
+        (the usual Spark/lakehouse pattern for append-logs). A log the
+        driver may hold (see `load_collection`) is rewritten as one
+        file with pyarrow; a larger one by a Spark job."""
         if not self._cold_exists(id):
             raise _err_not_found_any(id)
         path = self._path(id)
         with self._lock:
-            df = self._compacted(self.spark.read.schema(LOG_SCHEMA).parquet(path))
             # Crash-safe swap: every intermediate state is recoverable by
             # _recover() — tmp is only promoted once its _SUCCESS marker
             # exists, and the displaced original survives as .old until
             # the swap completes.
             tmp = path + ".compact.tmp"
             bak = path + ".compact.old"
-            df.write.mode("overwrite").parquet(tmp)
+            latest = self._driver_log(path)
+            if latest is None:
+                self._compacted(
+                    self.spark.read.schema(LOG_SCHEMA).parquet(path)
+                ).write.mode("overwrite").parquet(tmp)
+            else:
+                _write_segment(tmp, latest)
             os.rename(path, bak)
             os.rename(tmp, path)
             shutil.rmtree(bak)
-            if id in self._hot_base:  # refresh the cached view
+            if id in self._hot_base:  # refresh the hot base
                 base = self._hot_base[id]
-                if base is not None:
+                if isinstance(base, DataFrame):
                     base.unpersist()
                 self.load_collection(id)
 
@@ -480,9 +568,4 @@ class Engine:
         with self._lock:
             if id not in self._hot_base:
                 raise _err_not_found_hot(id)  # hot.go:84
-            base = self._hot_base[id]
-            if base is not None:
-                base.unpersist()
-            del self._hot_base[id]
-            del self._pending[id]
-            self._hot_dict.pop(id, None)
+            self._evict(id)

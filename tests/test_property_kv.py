@@ -49,7 +49,6 @@ def prop_spark(spark):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@pytest.mark.slow
 def test_engine_matches_dict_model(prop_spark, tmp_path_factory, sequence):
     data_dir = str(tmp_path_factory.mktemp("prop"))
     engine = Engine(prop_spark, data_dir)
@@ -88,7 +87,6 @@ def test_engine_matches_dict_model(prop_spark, tmp_path_factory, sequence):
             assert reborn.read_key(coll, key) == value
 
 
-@pytest.mark.slow
 def test_engine_concurrent_access_matches_models(spark, tmp_path_factory):
     """Concurrent write/read/flush/promote against ONE Engine.
 
